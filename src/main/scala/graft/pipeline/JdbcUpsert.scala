@@ -237,7 +237,7 @@ object JdbcUpsert {
     * retry by RECONNECTING and replaying the current in-memory batch —
     * safe because committed batches are durable and the upsert is
     * idempotent (an in-doubt commit at death simply replays to the
-    * same rows).
+    * same rows). `backoff` sleeps before each retry (a seam for specs).
     */
   private[graft] def writePartition(
       connect: () => java.sql.Connection,
@@ -248,6 +248,7 @@ object JdbcUpsert {
       maxRetries: Int,
       queryTimeoutSec: Int = 300,
       extraTransient: Throwable => Boolean = (_: Throwable) => false,
+      backoff: Long => Unit = Thread.sleep(_),
   ): Unit = {
     var conn: java.sql.Connection = null
     var st: java.sql.PreparedStatement = null
@@ -308,24 +309,29 @@ object JdbcUpsert {
                 // briefly unavailable (failover/restart — the exact
                 // scenario this path targets); spend the remaining retry
                 // budget on it instead of letting the reconnect error
-                // escape with the original failure discarded.
+                // escape with the original failure discarded. One backoff
+                // per reconnect attempt, none after it.
                 var opened = false
                 while (!opened) {
+                  backoff(50L * attempt)
                   try { open(); opened = true }
                   catch {
-                    case oe: Throwable if scala.util.control.NonFatal(oe) =>
+                    // a fatal open() error (an interrupted task) is not
+                    // retried, but still carries the batch failure
+                    case oe: Throwable =>
+                      if (!scala.util.control.NonFatal(oe) || attempt >= maxRetries) {
+                        oe.addSuppressed(e); throw oe
+                      }
                       closeQuietly() // half-open connection from a failed open()
-                      if (attempt >= maxRetries) { oe.addSuppressed(e); throw oe }
                       attempt += 1
-                      Thread.sleep(50L * attempt)
                   }
                 }
               }
               else {
                 try conn.rollback() catch { case _: java.sql.SQLException => () }
                 st.clearBatch()
+                backoff(50L * attempt) // linear backoff: victims re-collide less
               }
-              Thread.sleep(50L * attempt) // linear backoff: victims re-collide less
           }
         }
       }

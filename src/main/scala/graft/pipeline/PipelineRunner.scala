@@ -20,10 +20,11 @@ import org.apache.spark.sql.functions._
   * and re-reads them (:196-201,220-224 — its IR between worker
   * processes), here each branch is ONE logical plan: mapping projection
   * and enrichment fuse into the scan under whole-stage codegen, and the
-  * only materialization is the sink write. The two branches run as
-  * concurrent Spark jobs on a shared cached input; the barrier is
-  * Await.all; cleanup (unpersist) replaces the reference's temp-file GC
-  * task (:350-373).
+  * only materialization is the sink write: over [[ZipIngest]]'s input a
+  * branch is exactly one Spark job. The branches run as concurrent jobs,
+  * each reading its own entity's input once, so nothing is cached; the
+  * barrier is Await.all. With no temp files there is nothing for the
+  * reference's temp-file GC task (:350-373) to clean.
   */
 object PipelineRunner {
 
@@ -60,15 +61,11 @@ object PipelineRunner {
       // the failure alert hook (Dag.scala)
       val nodes = entities.map { case (entity, raw) =>
         entity -> (() => {
-          val cached = raw.cache()
-          try {
-            val mapped = spec.mappings.get(entity).fold(cached)(m => MappingCompiler.transform(cached, m))
-            val enriched = spec.enrichments.getOrElse(entity, identity[DataFrame] _)(mapped)
-            enriched
-              .observe(StatsListener.observeName(spec.runId, entity), count(lit(1)).as("rows"))
-              .write.mode("overwrite").parquet(s"${spec.sinkDir}/$entity")
-          } finally cached.unpersist()
-          ()
+          val mapped = spec.mappings.get(entity).fold(raw)(m => MappingCompiler.transform(raw, m))
+          val enriched = spec.enrichments.getOrElse(entity, identity[DataFrame] _)(mapped)
+          enriched
+            .observe(StatsListener.observeName(spec.runId, entity), count(lit(1)).as("rows"))
+            .write.mode("overwrite").parquet(s"${spec.sinkDir}/$entity")
         })
       }
       val result = Dag.run(Dag.Spec(

@@ -1329,7 +1329,6 @@ final class GraftLakeScanBuilder(
     import org.apache.spark.sql.types._
     if (pushed.nonEmpty || agg.groupByExpressions().nonEmpty) return None
     if (m.hasMorDeletes || m.renamesApply) return None
-    if (!spark.conf.get("spark.graft.manifestAgg.enabled", "true").toBoolean) return None
     val aliases = ManifestSkipping.aliasesOf(m)
     def colOf(e: org.apache.spark.sql.connector.expressions.Expression): Option[StructField] =
       e match {

@@ -8,7 +8,11 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * planner STRATEGIES, but deliberately not plan construction — every
   * engine that ships its own operators (Iceberg, Delta) hosts exactly
   * this shim in `org.apache.spark.sql` for the same reason. Nothing is
-  * overridden or monkey-patched; this is one forwarding call.
+  * overridden or monkey-patched; this is one forwarding call. The only
+  * other package-private doorway is
+  * [[org.apache.spark.sql.catalyst.json.GraftJsonBridge]], which forwards
+  * the `private[json]` `JsonInferSchema.canonicalizeType` for
+  * [[graft.sources.ZipIngest]]'s driver-side schema inference.
   */
 object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =

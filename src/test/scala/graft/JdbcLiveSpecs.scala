@@ -283,12 +283,43 @@ class JdbcLiveSpecs extends SparkSpec {
       val real = java.sql.DriverManager.getConnection(url)
       if (opened.getAndIncrement() == 0) dyingConn(real) else real
     }
-    JdbcUpsert.writePartition(connect _, sql, ords,
-      (1L to 5L).map(i => Row(i, s"v$i")).iterator, batchSize = 2, maxRetries = 3)
+    val sleeps = scala.collection.mutable.ArrayBuffer.empty[Long]
+    def write(connect: () => java.sql.Connection, v: String): Unit =
+      JdbcUpsert.writePartition(connect, sql, ords,
+        (1L to 5L).map(i => Row(i, s"$v$i")).iterator, batchSize = 2, maxRetries = 3,
+        backoff = sleeps += _)
+    write(connect _, "v")
     assert(deaths.get() <= 0, "the injected connection death was never hit")
     assert(opened.get() === 2, "exactly one reconnect expected")
+    assert(sleeps === Seq(50L), "one backoff before the reconnect, none after it")
     assert(readAll(url, "SELECT k, v FROM cd ORDER BY k") ===
       (1L to 5L).map(i => Seq(i, s"v$i")))
+
+    // the database refuses the first reconnect: the retry budget pays
+    // for a second one, with one backoff per attempt (never a second
+    // sleep after the loop already slept)
+    deaths.set(1); opened.set(0); sleeps.clear()
+    def refusedOnce(): java.sql.Connection = opened.getAndIncrement() match {
+      case 0 => dyingConn(java.sql.DriverManager.getConnection(url))
+      case 1 => throw new java.sql.SQLNonTransientConnectionException("refused", "08001")
+      case _ => java.sql.DriverManager.getConnection(url)
+    }
+    write(refusedOnce _, "w")
+    assert(opened.get() === 3)
+    assert(sleeps === Seq(50L, 100L))
+    assert(readAll(url, "SELECT k, v FROM cd ORDER BY k") ===
+      (1L to 5L).map(i => Seq(i, s"w$i")))
+
+    // a fatal open() error (the task is killed while reconnecting) is not
+    // retried, and it carries the batch failure that began the reconnect
+    deaths.set(1); opened.set(0)
+    def killedWhileReconnecting(): java.sql.Connection =
+      if (opened.getAndIncrement() == 0) dyingConn(java.sql.DriverManager.getConnection(url))
+      else throw new InterruptedException("killed")
+    val fatal = intercept[InterruptedException](write(killedWhileReconnecting _, "x"))
+    assert(opened.get() === 2, "a fatal open() error must not be retried")
+    assert(fatal.getSuppressed.toSeq.collect { case sq: java.sql.SQLException => sq.getSQLState } ===
+      Seq("08003"), "the batch failure must ride along as a suppressed exception")
     // classifier sanity: 08xxx chains match, unrelated states don't
     assert(JdbcUpsert.isConnectionDeath(
       new java.sql.SQLException("boom", "08006")))

@@ -26,6 +26,45 @@ class ZipIngestSpec extends SparkSpec {
     assert(payload.entities("transaction").count() === 1L)
   }
 
+  test("driver-inferred member schema equals spark.read.json's; read rows match too") {
+    import spark.implicits._
+    val fixtures = Seq(
+      "ext-JSON wrappers" -> Seq(
+        """{"_id": {"$oid": "aa"}, "created": {"$date": 1600000000000}, "amount": {"$numberDecimal": "9.99"}}""",
+        """{"_id": {"$oid": "bb"}, "created": {"$date": "2020-09-13T12:26:40Z"}, "amount": {"$numberDecimal": "10"}}"""),
+      "nested, arrays, missing and all-null fields" -> Seq(
+        """{"a": {"b": [1, 2], "c": {"d": "x"}}, "n": null, "e": []}""",
+        """{"a": {"b": [], "c": null}, "e": [{"f": 1}, {"g": "y"}], "z": {}}""",
+        """{"n": null, "m": [null], "e": [{"f": 2.5}]}"""),
+      "int/double/string widening" -> Seq(
+        """{"i": 1, "l": 1, "d": 1, "s": 1, "arr": [1]}""",
+        """{"i": 2, "l": 12345678901234, "d": 2.5, "s": "two", "arr": [1.5, "x"]}""",
+        """{"i": -3, "d": 1e300, "s": true, "arr": null}"""),
+      "blank line" -> Seq("""{"a": 1}""", "", """{"a": 2, "b": "x"}""", "   "),
+      "empty member" -> Seq.empty[String],
+      "top-level array and scalar lines" -> Seq("""[{"a": 1}, {"a": 2}]""", "42", """{"b": "x"}"""),
+      "malformed line" -> Seq("""{"a": 1}""", """{"a": """, """{"a": 3, "b": [1}"""),
+    )
+    val malformed = fixtures.toMap.apply("malformed line")
+    val corruptKey = "spark.sql.columnNameOfCorruptRecord"
+    def check(): Unit = fixtures.foreach { case (label, lines) =>
+      val expected = spark.read.json(spark.createDataset(lines))
+      assert(ZipIngest.inferSchema(spark, lines) === expected.schema, label)
+      val zip = tmpDir("zipschema").resolve("in.zip")
+      Fixtures.writeZip(zip, Seq("m.json" -> lines.mkString("\n")))
+      val got = ZipIngest.read(spark, zip.toString).entities("m")
+      assert(got.schema === expected.schema, label)
+      assert(got.collect().toSeq === expected.collect().toSeq, label)
+    }
+    check()
+    assert(ZipIngest.inferSchema(spark, malformed).fieldNames.contains("_corrupt_record"))
+    spark.conf.set(corruptKey, "_bad")
+    try {
+      check()
+      assert(ZipIngest.inferSchema(spark, malformed).fieldNames.contains("_bad"))
+    } finally spark.conf.unset(corruptKey)
+  }
+
   test("metadata parser flattens scalars, ignores nested") {
     val m = ZipIngest.parseMetadata("""{"a": "x", "n": 5, "f": 1.5, "b": true, "nested": {"k": 1}}""")
     assert(m === Map("a" -> "x", "n" -> "5", "f" -> "1.5", "b" -> "true"))
@@ -83,6 +122,61 @@ class PipelineRunnerSpec extends SparkSpec {
     assert(byStep("contact").exists(_.rows.contains(2L)))
     assert(byStep("transaction").exists(_.rows.contains(3L)))
     assert(alerts.alerts.isEmpty)
+  }
+
+  test("runFromZip starts one Spark job per entity and writes one part file each; a large member still splits") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val dir = tmpDir("pipelinejobs")
+    val zip = dir.resolve("input.zip")
+    val sink = dir.resolve("sink").toString
+    Fixtures.writeZip(zip, Seq(
+      "metadata.json" -> """{"workflow_system_name": "crm", "company_id": 42}""",
+      "contact.json" -> (1 to 20).map(i => s"""{"cid": "c$i", "name": "n$i"}""").mkString("\n"),
+      "transaction.json" -> (1 to 40).map(i => s"""{"tid": $i, "amount": $i.5}""").mkString("\n"),
+    ))
+    val spec = PipelineSpec(
+      runId = "run_jobs",
+      mappings = Map(
+        "contact" -> Seq(FieldMapping("cid", "contact_id"), FieldMapping("upper(name)", "full_name")),
+        "transaction" -> Seq(FieldMapping("tid", "txn_id", Some("bigint")), FieldMapping("amount", "amount"))),
+      sinkDir = sink,
+    )
+    // count every job start up to a marker job submitted after the run:
+    // listener delivery is ordered, so seeing the marker means every
+    // earlier job start has been delivered too
+    val marker = "pipelinejobs-marker"
+    val jobs = new AtomicInteger(0)
+    val markerSeen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.job.description") == marker)) markerSeen.countDown()
+        else { jobs.incrementAndGet(); () }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      PipelineRunner.runFromZip(spark, zip.toString, spec)
+      spark.sparkContext.setJobDescription(marker)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      assert(markerSeen.await(30, TimeUnit.SECONDS), "marker job start never delivered")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get() === 2, "one write job per entity: no schema-inference job, no cache job")
+    for (entity <- Seq("contact", "transaction")) {
+      val parts = new java.io.File(s"$sink/$entity").listFiles().map(_.getName).filter(_.startsWith("part-"))
+      assert(parts.length === 1, s"$entity: ${parts.toSeq}")
+    }
+    assert(spark.read.parquet(s"$sink/transaction").count() === 40L)
+
+    // partitions follow the member's bytes: over spark.sql.files.maxPartitionBytes
+    // a member splits (up to defaultParallelism), without losing rows
+    val key = "spark.sql.files.maxPartitionBytes"
+    spark.conf.set(key, "256")
+    val split = try ZipIngest.read(spark, zip.toString).entities("transaction") finally spark.conf.unset(key)
+    val n = split.rdd.getNumPartitions
+    assert(n > 1 && n <= spark.sparkContext.defaultParallelism, s"$n partitions")
+    assert(split.count() === 40L)
   }
 
   test("failing branch raises after the barrier and the alert sink fires (dag_utils TODO)") {
