@@ -1,10 +1,28 @@
 package graft.pipeline
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+/** Failure-alert hook: [[PipelineRunner]] calls it once per failed
+  * step, from its Dag's failure callback (the reference's Slack alert,
+  * dag_utils.py:8-35). Pluggable so runs without network egress can
+  * still be checked: [[HttpAlertSink]] posts the webhook,
+  * [[LogAlertSink]] records in-process.
+  */
+trait AlertSink extends Serializable {
+  def alert(runId: String, step: String, error: String): Unit
+}
+
+/** In-process alert sink (test/default). */
+final class LogAlertSink extends AlertSink {
+  val alerts = new ConcurrentLinkedQueue[(String, String, String)]
+  override def alert(runId: String, step: String, error: String): Unit =
+    alerts.add((runId, step, error))
+}
+
 /** Slack-webhook alert sink — the production implementation of
   * [[AlertSink]] (the reference posts failure alerts to a Slack
-  * webhook from its failure callback, /root/reference/dag_utils.py:27-35
-  * [inferred]; this container is egress-free, so the contract spec
-  * exercises it against a local HTTP stub).
+  * webhook from its failure callback, dag_utils.py:27-35 [inferred];
+  * the contract spec exercises it against a local HTTP stub).
   *
   * Contract:
   *  - POSTs the Slack incoming-webhook JSON (`{"text": ...}`) with a
@@ -13,8 +31,8 @@ package graft.pipeline
   *  - alerting is BEST-EFFORT: a non-2xx response or transport error
   *    is logged to stderr and swallowed (the reference's failure
   *    callback has the same posture — a dead webhook must not mask
-  *    the original task failure, which is already recorded in the
-  *    FAILED stats row by [[StatsListener]]);
+  *    the original task failure, which still surfaces as the exception
+  *    [[PipelineRunner.run]] rethrows after its barrier);
   *  - message text is JSON-escaped here, never string-spliced raw.
   */
 final class HttpAlertSink(

@@ -263,10 +263,11 @@ private[sources] trait GraftWriteLayout extends RequiresDistributionAndOrdering 
 /** `df.writeStream.toTable("graft.lake.t")`: each micro-batch epoch
   * stages its files like a batch write and commits them as one
   * manifest version whose `txn` marker is `stream-<queryId>-<epoch>` —
-  * the SAME exactly-once discipline as the foreachBatch sinks
-  * ([[graft.streaming.ManifestStream]]): a replayed epoch finds its
-  * txn already committed in a retained manifest and skips the install
-  * entirely, so crash-replay can never double rows. Complete/truncate
+  * the streaming append path, with the same txn-marked exactly-once
+  * commit ([[ManifestTable.commit]]) as the indexed/upsert/delete
+  * foreachBatch sinks: a replayed epoch finds its txn already
+  * committed in a retained manifest and skips the install entirely,
+  * so crash-replay can never double rows. Complete/truncate
   * output mode replaces the snapshot per epoch instead of appending.
   */
 final class GraftStreamingWrite(

@@ -201,7 +201,7 @@ object ManifestTable {
     * commit loop. `txn` makes a commit idempotent: if any retained
     * manifest already carries the id, the staged write is skipped and
     * the committed version returned — exactly-once for streaming
-    * replays ([[graft.streaming.ManifestStream]]).
+    * replays ([[GraftStreamingWrite]], [[graft.streaming.ManifestStream]]).
     */
   def commit(df: DataFrame, dir: String, track: Seq[String], txn: Option[String] = None): Long =
     commitFiles(df, dir, track, txn, replace = false)

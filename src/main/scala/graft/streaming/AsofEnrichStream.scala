@@ -33,8 +33,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * Exactly-once: each batch's enriched rows append to the output
   * manifest table with `txn = asof-enrich-<batchId>`, so a replayed
   * batch short-circuits against the committed marker — the same
-  * replay discipline as [[ManifestStream]], end-to-end atomic with the
-  * output table's snapshot isolation.
+  * replay discipline as [[graft.sources.GraftStreamingWrite]],
+  * end-to-end atomic with the output table's snapshot isolation.
   *
   * Scale shape per batch: the dimension side shuffles/sorts ONCE per
   * batch at its own size; the batch side is micro-batch-sized. For a

@@ -4,18 +4,23 @@ import graft.sources.{ManifestTable, MemberIndex}
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-/** Streaming ingest into a [[graft.sources.ManifestTable]]: every
-  * micro-batch lands as one atomic manifest commit, so downstream
-  * readers — interactive pruned scans included — always see a complete
-  * snapshot, never a torn directory listing mid-write.
+/** Streaming sinks into a [[graft.sources.ManifestTable]] that
+  * `writeStream.toTable` cannot express: indexed ingest, CDC upsert
+  * and retraction. A plain append stream goes through the catalog
+  * (`writeStream.toTable("graft.<ns>.<table>")`,
+  * [[graft.sources.GraftStreamingWrite]]), which commits each epoch
+  * the same way.
   *
-  * Exactly-once comes from the commit protocol itself, not the sink:
-  * the batch id is carried as the manifest's `txn` marker, and a
-  * REPLAYED batch (structured streaming re-fires only batches that
-  * never acked) short-circuits inside [[ManifestTable.commit]] before
-  * staging any data — zero duplicate rows AND zero orphan files, the
-  * same guarantee class as [[SnapshotChain]] with commit arbitration
-  * done by atomic manifest creation instead of version dirs.
+  * Every micro-batch lands as one atomic manifest commit, so downstream
+  * readers — interactive pruned scans included — always see a complete
+  * snapshot, never a torn directory listing mid-write. Exactly-once
+  * comes from the commit protocol itself, not the sink: the batch id is
+  * carried as the manifest's `txn` marker, and a REPLAYED batch
+  * (structured streaming re-fires only batches that never acked)
+  * short-circuits inside [[ManifestTable.commit]] before staging any
+  * data — zero duplicate rows AND zero orphan files, the same guarantee
+  * class as [[SnapshotChain]] with commit arbitration done by atomic
+  * manifest creation instead of version dirs.
   *
   * Each commit also collects per-file min/max of `track` over the NEW
   * batch only (map-side, no history re-scan), so file-skipping stats
@@ -25,27 +30,6 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * into range-clustered ones transactionally.
   */
 object ManifestStream {
-
-  def start(
-      stream: DataFrame,
-      dir: String,
-      track: Seq[String],
-      checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("1 minute"),
-  ): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        processBatch(batch.toDF(), batchId, dir, track)
-      }
-      .start()
-
-  /** One idempotent append step (public so replay/crash windows are
-    * spec-able without a streaming harness).
-    */
-  def processBatch(batch: DataFrame, batchId: Long, dir: String, track: Seq[String]): Unit =
-    ManifestTable.commit(batch, dir, track, txn = Some(s"stream-$batchId")): Unit
 
   /** Ingest with a hot point-lookup index: each micro-batch commits
     * atomically AND advances the per-file membership index
@@ -98,7 +82,7 @@ object ManifestStream {
     * applier): upstream dedupes each batch to one row per key (LWW by
     * sequence — [[graft.pipeline.VerifiedUpdates]]); this sink makes
     * the apply transactional, exactly-once under replay (batch-id txn
-    * markers, same window as [[processBatch]]), and snapshot-isolated
+    * markers, same window as [[indexedBatch]]), and snapshot-isolated
     * for concurrent readers.
     */
   def startUpsert(

@@ -1,15 +1,14 @@
 package graft.tools
 
-import graft.{Engine, Tables}
+import graft.Engine
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
-/** Ad-hoc perf probe for optimization rounds: times named sub-stages of
-  * the expensive queries with the noop sink so a regression can be
-  * attributed to a stage instead of a whole query. Dev tooling only —
-  * nothing here is a declared query or changes one.
+/** Ad-hoc perf probe for the open q130 mix question: runs the
+  * expensive-query mix with the noop sink and reports q130's stage
+  * memory and time, dedicated vs mixed. Dev tooling only — nothing here
+  * is a declared query or changes one.
   *
-  * Usage: SPARK_GRAFT_SF_DIR=... sbt "runMain graft.tools.Probe <probe> [reps]"
+  * Usage: SPARK_GRAFT_SF_DIR=... sbt "runMain graft.tools.Probe q130mix [reps]"
   */
 object Probe {
   def main(args: Array[String]): Unit = {
@@ -19,88 +18,7 @@ object Probe {
     spark.range(1000000L).selectExpr("sum(id)").collect()
     def noop(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
-    def time(name: String)(f: => Unit): Unit = {
-      val best = (1 to reps).map { _ =>
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }.min
-      println(f"[probe] $name%-40s $best%8.3f s (min of $reps)")
-    }
-    val t = Tables(spark, sfDir)
-    args.headOption.getOrElse("edges") match {
-      case "edges" =>
-        val li0 = t.lineitem
-          .filter(col("l_orderkey").isNotNull && col("l_partkey").isNotNull)
-          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-        time("incidence distinct (primitive agg)") {
-          noop(li0.distinct())
-        }
-        time("byBasket collect_set (object agg)") {
-          noop(li0.groupBy("ok").agg(collect_set(col("pk")).as("items")))
-        }
-        time("old: selfjoin pairs from distinct") {
-          val li = graft.operators.Lineage.pin(li0.distinct())
-          noop(li.toDF("ok", "src").join(li.toDF("ok", "dst"), "ok")
-            .filter(col("src") =!= col("dst")).select("src", "dst"))
-        }
-        time("new: explode pairs from collect_set") {
-          val bb = graft.operators.Lineage.pin(
-            li0.groupBy("ok").agg(collect_set(col("pk")).as("items")))
-          noop(bb.select(explode(col("items")).as("src"), col("items"))
-            .select(col("src"),
-              explode(filter(col("items"), x => x =!= col("src"))).as("dst")))
-        }
-        time("new+distinct (what runInt consumes)") {
-          val bb = graft.operators.Lineage.pin(
-            li0.groupBy("ok").agg(collect_set(col("pk")).as("items")))
-          noop(bb.select(explode(col("items")).as("src"), col("items"))
-            .select(col("src"),
-              explode(filter(col("items"), x => x =!= col("src"))).as("dst"))
-            .distinct())
-        }
-        time("old+distinct (what runInt consumed)") {
-          val li = graft.operators.Lineage.pin(li0.distinct())
-          noop(li.toDF("ok", "src").join(li.toDF("ok", "dst"), "ok")
-            .filter(col("src") =!= col("dst")).select("src", "dst").distinct())
-        }
-      case "runint" =>
-        val li0 = t.lineitem
-          .filter(col("l_orderkey").isNotNull && col("l_partkey").isNotNull)
-          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-        def oldEdges(): DataFrame = {
-          val li = graft.operators.Lineage.pin(li0.distinct())
-          li.toDF("ok", "src").join(li.toDF("ok", "dst"), "ok")
-            .filter(col("src") =!= col("dst")).select("src", "dst")
-        }
-        def newEdges(): DataFrame = {
-          val bb = graft.operators.Lineage.pin(
-            li0.groupBy("ok").agg(collect_set(col("pk")).as("items")))
-          bb.select(explode(col("items")).as("src"), col("items"))
-            .select(col("src"),
-              explode(filter(col("items"), x => x =!= col("src"))).as("dst"))
-        }
-        time("runInt on OLD selfjoin edges") {
-          noop(graft.operators.PageRank.runInt(oldEdges(), "src", "dst", iters = 5))
-        }
-        time("runInt on NEW explode edges") {
-          noop(graft.operators.PageRank.runInt(newEdges(), "src", "dst", iters = 5))
-        }
-      case "phrase" =>
-        val docs = t.documents
-        time("buildPhraseIndex (write only)") {
-          val p = graft.Artifacts.scratch("probe_phrase")
-          graft.api.TextCuration.buildPhraseIndex(docs, "doc_id", "text", n = 2, path = p)
-        }
-        val p2 = graft.Artifacts.scratch("probe_phrase2")
-        graft.api.TextCuration.buildPhraseIndex(docs, "doc_id", "text", n = 2, path = p2)
-        time("q98 summary read-back") {
-          noop(spark.read.parquet(p2)
-            .groupBy(col("bucket").cast("long").as("bucket"))
-            .agg(count(lit(1)).as("n_postings"), countDistinct(col("nh")).as("n_ngrams")))
-        }
-      case "q121" =>
-        time("q121 full") {
-          noop(graft.SparkEntry.queries("q121_pagerank")(spark, sfDir))
-        }
+    args.headOption.getOrElse("q130mix") match {
       case "q130mix" =>
         // VERDICT r20 #1: name q130's interleaved-mix constant with
         // MEMORY evidence — accumulate per-job-description task metrics

@@ -83,9 +83,9 @@ class EgressAdapterSpecs extends AnyFunSuite {
         graft.pipeline.PipelineRunner.run(spark, Map("bad" -> Seq(1L, 2L).toDF("x")),
           spec, new HttpAlertSink(s"$base/hook"))
       }
-      // listener delivery is async; bounded wait for the webhook post
-      val deadline = System.nanoTime() + 30e9.toLong
-      while (posts.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+      // the alert is posted synchronously before run() throws: exactly
+      // one POST for the one failed step
+      assert(posts.size === 1, posts.asScala.toSeq.toString)
       assert(posts.asScala.exists(b => b.contains("run_http") && b.contains("bad")),
         posts.asScala.toSeq.toString)
     }

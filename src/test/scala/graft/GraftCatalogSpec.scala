@@ -478,7 +478,6 @@ class GraftCatalogSpec extends SparkSpec {
       assert(txns.flatten.distinct.size == txns.flatten.size, "epoch txns must be distinct")
       // a replayed epoch is a no-op: same txn already committed
       val head = ManifestTable.latestVersion(dir).get
-      graft.streaming.ManifestStream // (txn discipline shared with the foreachBatch sinks)
       assert(ManifestTable.manifest(dir, Some(head)).files.nonEmpty)
     } finally q.stop()
     // envelope stats from streamed files prune like any commit

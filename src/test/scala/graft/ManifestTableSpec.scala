@@ -413,11 +413,11 @@ class ManifestTableSpec extends SparkSpec {
 
   test("streaming append sink: replayed batch is a no-op (no dup rows, no orphan files)") {
     val dir = freshDir()
-    ManifestStream.processBatch(Seq(1L, 2L).toDF("id"), batchId = 0L, dir, Seq("id"))
-    ManifestStream.processBatch(Seq(3L).toDF("id"), batchId = 1L, dir, Seq("id"))
+    ManifestTable.commit(Seq(1L, 2L).toDF("id"), dir, Seq("id"), txn = Some("stream-0"))
+    ManifestTable.commit(Seq(3L).toDF("id"), dir, Seq("id"), txn = Some("stream-1"))
     val dataDirs = Option(new java.io.File(dir, "data").listFiles()).get.length
     // crash window: batch 1 re-fires after a lost ack
-    ManifestStream.processBatch(Seq(3L).toDF("id"), batchId = 1L, dir, Seq("id"))
+    ManifestTable.commit(Seq(3L).toDF("id"), dir, Seq("id"), txn = Some("stream-1"))
     assert(ManifestTable.snapshot(spark, dir).as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
     assert(ManifestTable.latestVersion(dir).contains(2L), "replay must not mint a version")
     assert(Option(new java.io.File(dir, "data").listFiles()).get.length == dataDirs,
@@ -1426,24 +1426,36 @@ class ManifestTableSpec extends SparkSpec {
 
   test("end-to-end stream -> manifest commits -> converges to the batch table") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val dir = freshDir()
+    import org.apache.spark.sql.streaming.Trigger
+    val warehouse = tmpDir("manifest-wh").toString
+    spark.conf.set("spark.sql.catalog.graftms", "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.graftms.warehouse", warehouse)
+    spark.sql("CREATE TABLE graftms.lake.streamed (id BIGINT) PARTITIONED BY (id)")
+    val dir = s"$warehouse/lake/streamed"
     val ckpt = tmpDir("manifest-ckpt").toString
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val mem = MemoryStream[Long]
-    val q = ManifestStream.start(mem.toDF().withColumnRenamed("value", "id"), dir, Seq("id"), ckpt,
-      trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
+    def drain(): Unit = {
+      val q = mem.toDF().withColumnRenamed("value", "id").writeStream
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .toTable("graftms.lake.streamed")
+      q.awaitTermination(60000)
+      assert(q.exception.isEmpty, q.exception.toString)
+    }
     mem.addData(1L to 100L: _*)
-    q.awaitTermination(60000)
-    val q2 = ManifestStream.start(mem.toDF().withColumnRenamed("value", "id"), dir, Seq("id"), ckpt,
-      trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
+    drain()
+    // restart on the same checkpoint: only the new offsets land
     mem.addData(101L to 150L: _*)
-    q2.awaitTermination(60000)
+    drain()
     assert(ManifestTable.snapshot(spark, dir).as[Long].collect().sorted.toSeq == (1L to 150L))
+    val txns = ManifestTable.versions(dir).flatMap(v => ManifestTable.manifest(dir, Some(v)).txn)
+    assert(txns.size == 2 && txns.forall(_.startsWith("stream-")), s"one txn-marked commit per epoch: $txns")
   }
 
   test("maintenance beside ingest: streaming appends racing compactSmall lose nothing") {
     val dir = freshDir()
-    ManifestStream.processBatch(Seq(0L).toDF("id"), 0L, dir, Seq("id"))
+    ManifestTable.commit(Seq(0L).toDF("id"), dir, Seq("id"), txn = Some("stream-0"))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutor(pool)
@@ -1451,7 +1463,7 @@ class ManifestTableSpec extends SparkSpec {
     val ingest = scala.concurrent.Future {
       barrier.await()
       (1 to 12).foreach(b =>
-        ManifestStream.processBatch(Seq(b.toLong).toDF("id"), b.toLong, dir, Seq("id")))
+        ManifestTable.commit(Seq(b.toLong).toDF("id"), dir, Seq("id"), txn = Some(s"stream-$b")))
     }
     val maintain = scala.concurrent.Future {
       barrier.await()
@@ -1467,7 +1479,7 @@ class ManifestTableSpec extends SparkSpec {
       "every batch must survive interleaved compaction")
     // replay of an already-compacted batch is still a no-op
     val head = ManifestTable.latestVersion(dir)
-    ManifestStream.processBatch(Seq(5L).toDF("id"), 5L, dir, Seq("id"))
+    ManifestTable.commit(Seq(5L).toDF("id"), dir, Seq("id"), txn = Some("stream-5"))
     assert(ManifestTable.latestVersion(dir) == head)
   }
 

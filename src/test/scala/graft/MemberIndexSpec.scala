@@ -93,8 +93,8 @@ class MemberIndexSpec extends SparkSpec {
     assert(ManifestTable.latestVersion(dir).contains(head))
     assert(MemberIndex.lookup(spark, dir, "key", Seq(77L)).count() == 1)
     // crash window: a commit lands WITHOUT its index step (plain
-    // processBatch) — the next indexed batch's build covers it too
-    ManifestStream.processBatch(batch(91, 95), 2L, dir, Seq("key"))
+    // txn-marked commit) — the next indexed batch's build covers it too
+    ManifestTable.commit(batch(91, 95), dir, Seq("key"), txn = Some("stream-2"))
     ManifestStream.indexedBatch(batch(96, 99), 3L, dir, Seq("key"), "key", 1 << 14, 3)
     assert(MemberIndex.lookup(spark, dir, "key", Seq(93L, 97L)).count() == 2)
     // the indexed lookup equals the plain filter over the head snapshot

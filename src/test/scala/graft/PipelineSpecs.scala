@@ -192,10 +192,10 @@ class PipelineRunnerSpec extends SparkSpec {
     intercept[Exception] {
       PipelineRunner.run(spark, Map("bad" -> bad), spec, alerts)
     }
-    // the dag_utils TODO behavior: the failure fired an alert attributed
-    // to THIS run and step
+    // the dag_utils TODO behavior: the failure fired exactly one alert,
+    // attributed to THIS run and step, before run() threw
     import scala.jdk.CollectionConverters._
-    assert(alerts.alerts.asScala.exists { case (r, s, _) => r == "run_test_2" && s == "bad" },
+    assert(alerts.alerts.asScala.toSeq.map { case (r, s, _) => (r, s) } === Seq(("run_test_2", "bad")),
       alerts.alerts.asScala.toSeq.toString)
   }
 
@@ -221,12 +221,8 @@ class PipelineRunnerSpec extends SparkSpec {
     val statsGood = Await.result(goodF, 2.minutes)
     intercept[Exception](Await.result(badF, 2.minutes))
     // the bad run alerted under ITS id; the healthy run saw neither a
-    // FAILED stats row nor an alert (the shared-session listener must
-    // scope failures by observe node, not record every failed query).
-    // Grace period first: listener delivery is async, and a cross-fired
-    // alert would arrive late — the negative asserts must not pass by
-    // racing it
-    Thread.sleep(1000)
+    // FAILED stats row nor an alert. Alerts fire synchronously from the
+    // failing run's own Dag, so no late cross-fired alert can follow
     assert(alertsBad.alerts.asScala.exists { case (r, s, _) => r == "runBad" && s == "contact" },
       alertsBad.alerts.asScala.toSeq.toString)
     assert(alertsGood.alerts.asScala.isEmpty, alertsGood.alerts.asScala.toSeq.toString)

@@ -31,6 +31,13 @@ class WindowBoundSpecs extends SparkSpec {
     * the documented post-agg class). Conservative everywhere else:
     * Generate (explode) amplifies rows and voids a bound below it;
     * leaves are unbounded.
+    *
+    * Known blind spot: an Aggregate counts as a bound whatever its
+    * grouping keys, so one grouped by a near-unique key (e.g.
+    * `groupBy(doc_id)`) passes this audit while collapsing nothing —
+    * its output is as large as its input. The audit cannot tell key
+    * cardinality from the plan; such a site's bound rests on the
+    * argument in its operator comment, not on this check.
     */
   private def bounded(p: LogicalPlan): Boolean = p match {
     case _: GlobalLimit | _: LocalLimit => true
